@@ -261,12 +261,6 @@ PER_HOST_BUDGET = int(os.environ.get("SPARK_GRAFT_PER_HOST_BUDGET", "2048"))
 # the 10^10-scale wave fold (bounded driver transfer) is the bench default;
 # fold_mode="exact" is the budget=1 oracle-parity path
 FOLD_MODE = os.environ.get("SPARK_GRAFT_FOLD_MODE", "bounded")
-# pipelined waves (fetch+parse of wave N+1 overlaps wave N's processing —
-# the documented servers=2*budget equivalence, resume-safe via the
-# persisted in-flight batch). Off by default: on a saturated single box
-# the overlap only timeslices two CPU-bound phases (measured 125s vs 98s
-# at local[32]); it pays off when fetch latency, not CPU, dominates.
-PIPELINE = os.environ.get("SPARK_GRAFT_PIPELINE", "0") == "1"
 
 
 _FAIR_POOLS_PATH: str | None = None
@@ -274,8 +268,8 @@ _FAIR_POOLS_PATH: str | None = None
 
 def _fair_pools_file() -> str:
     """FAIR pool weights: in-path wave jobs (default pool) outweigh the
-    background hot-table materialization ('ckpt') and the pipeline-mode
-    prefetch — without this, FAIR's equal shares let the 4-way background
+    background hot-table materialization and durable commits ('ckpt') —
+    without this, FAIR's equal shares let the 4-way background
     checkpoint burst starve the dispatch top-k (measured 9 s -> 22.6 s
     for the phase across a 6-wave run). Written ONCE per process to a
     fixed temp path (ADVICE r4: a fresh NamedTemporaryFile per
@@ -288,7 +282,6 @@ def _fair_pools_file() -> str:
 <allocations>
   <pool name="default"><schedulingMode>FIFO</schedulingMode><weight>8</weight><minShare>8</minShare></pool>
   <pool name="ckpt"><schedulingMode>FIFO</schedulingMode><weight>1</weight><minShare>0</minShare></pool>
-  <pool name="prefetch"><schedulingMode>FIFO</schedulingMode><weight>2</weight><minShare>0</minShare></pool>
 </allocations>
 """
     import atexit
@@ -319,10 +312,10 @@ def make_spark(cpus: int, app: str):
         .config("spark.driver.memory", "48g")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        # pipelined waves submit the NEXT wave's parse concurrently with
-        # the current wave's (small) jobs; under FIFO the parse hogs every
-        # task slot and the wave jobs queue behind it — FAIR gives each
-        # pool an equal share so the overlap actually overlaps
+        # the background hot-table materialization and durable commits
+        # run concurrently with the wave's in-path jobs; under FIFO their
+        # jobs would take task slots ahead of the next dispatch top-k —
+        # FAIR with the low-weight 'ckpt' pool lets the wave jobs go first
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
@@ -387,7 +380,6 @@ def crawl_bench(spark, workdir: str, pages=None) -> dict:
         # frontier-throughput metric; off for the bench
         dump_every=0,
         fold_mode=FOLD_MODE,
-        pipeline_waves=PIPELINE,
     )
     t0 = time.time()
     # durable O(wave) delta commits every 2 waves INSIDE the measured
@@ -460,11 +452,10 @@ def run_once(cpus: int) -> dict:
 
 
 def trace_once(cpus: int) -> dict:
-    """One crawl with the per-phase profiler on: reports phase wall-clock
-    accumulators (the crawler's own _timer instrumentation) plus Spark
+    """One crawl reporting its phase wall-clock accumulators (the
+    crawler's own _timer instrumentation, ``SparkCrawler.timings``) plus Spark
     job/stage counts — the stage-count trace behind the scaling-efficiency
     analysis in BASELINE.md (what is serial per wave vs parallel work)."""
-    os.environ["SPARK_CRAWLER_PROFILE"] = "1"
     spark = make_spark(cpus, f"bench_trace_{cpus}")
     spark.sparkContext.setLogLevel("ERROR")
     from webcrawler_spark.config import CrawlConfig
@@ -479,7 +470,7 @@ def trace_once(cpus: int) -> dict:
         seeds=seeds, limit=CRAWL_LIMIT, targets=9, targeting=-1.0,
         allhosts=True, budget=CRAWL_BUDGET, per_host_budget=PER_HOST_BUDGET,
         host_salt_partitions=16, factor_top_m=256, dump_every=0,
-        fold_mode=FOLD_MODE, pipeline_waves=PIPELINE,
+        fold_mode=FOLD_MODE,
     )
     st = spark.sparkContext.statusTracker()
     jobs_before = set(st.getJobIdsForGroup())

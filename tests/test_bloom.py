@@ -76,7 +76,7 @@ def test_crawl_with_bloom_matches_without(spark, tmp_path):
     res = {}
     for name, extra in [
         ("exact", {}),
-        ("bloom", {"use_bloom_seen": True, "bloom_buckets": 8,
+        ("bloom", {"seen_filter": "bloom", "bloom_buckets": 8,
                    "bloom_bits_per_bucket": 1 << 14}),
         ("cuckoo", {"seen_filter": "cuckoo", "bloom_buckets": 8}),
     ]:

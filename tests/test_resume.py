@@ -6,7 +6,9 @@ are lost (a crash between commits replays the tail identically)."""
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import shutil
 
 import pytest
@@ -86,37 +88,54 @@ def test_resume_noop_when_finished(spark, site_df, tmp_path):
     assert r2.dispatched == r1.dispatched  # restored, nothing appended
 
 
-def test_pipeline_inflight_batch_survives_crash(spark, site_df, tmp_path):
-    """pipeline_waves dispatches wave N+1 BEFORE wave N's commit, so the
-    committed frontier/FIFO no longer contain that batch. The commit must
-    carry it (state['inflight']) and resume must re-enqueue it — pre-fix,
-    a crash after the commit silently never crawled those URLs."""
-    import json
-
-    from dataclasses import replace
-
+def test_resume_after_max_waves_stop_equals_uninterrupted(spark, site_df, tmp_path):
+    """A crawl stopped at max_waves and finalized, then resumed from that
+    final commit with nothing deleted, ends in the uninterrupted state.
+    Each wave dispatches its own batch, so no commit is ever taken with a
+    batch eliminated from the frontier but not yet processed."""
     pages, df = site_df
-    cfg = replace(cfg_for(pages), pipeline_waves=True)
+    cfg = cfg_for(pages)
 
-    full = SparkCrawler(spark, cfg, df, str(tmp_path / "pfull"), checkpoint_every=1)
+    full = SparkCrawler(spark, cfg, df, str(tmp_path / "full"), checkpoint_every=1)
     want = final_state(spark, full, full.run())
 
-    root = str(tmp_path / "pcrash")
+    root = str(tmp_path / "stopped")
     c1 = SparkCrawler(spark, cfg, df, root, checkpoint_every=1)
-    c1.run(max_waves=3)
-    committed = sorted(d for d in os.listdir(root) if d.startswith("wave="))
-    # the scenario is real: wave 1's manifest carries a non-empty in-flight
-    # batch (dispatched for wave 2, not yet processed)
-    with open(os.path.join(root, committed[1], "manifest.json")) as f:
-        m1 = json.load(f)
-    assert m1["state"]["inflight"], "expected an in-flight batch in the commit"
-    for d in committed[2:]:
-        shutil.rmtree(os.path.join(root, d))
+    r1 = c1.run(max_waves=3)
+    assert r1.waves == 3 and not c1.stopped  # stopped by max_waves, not the limit
 
     c2 = SparkCrawler.resume(spark, cfg, df, root, checkpoint_every=1)
-    assert [u for _, u in c2._inflight] == [u for _, u in m1["state"]["inflight"]]
     got = final_state(spark, c2, c2.run())
     assert got == want
+    for d in sorted(os.listdir(root)):
+        if d.startswith("wave="):
+            with open(os.path.join(root, d, "manifest.json")) as f:
+                assert "inflight" not in json.load(f)["state"], d
+
+
+def test_resume_refuses_manifest_with_in_flight_batch(spark, site_df, tmp_path):
+    """A manifest carrying a non-empty in-flight batch holds links already
+    eliminated from its frontier; resume must refuse it, naming the
+    manifest, instead of silently never crawling them. An empty one is
+    accepted."""
+    pages, df = site_df
+    cfg = cfg_for(pages)
+    root = str(tmp_path / "inflight")
+    SparkCrawler(spark, cfg, df, root, checkpoint_every=1).run(max_waves=2)
+    head = sorted(d for d in os.listdir(root) if d.startswith("wave="))[-1]
+    mpath = os.path.join(root, head, "manifest.json")
+    with open(mpath) as f:
+        m = json.load(f)
+
+    def resume_with_inflight(batch):
+        m["state"]["inflight"] = batch
+        with open(mpath, "w") as f:
+            json.dump(m, f)
+        return SparkCrawler.resume(spark, cfg, df, root, checkpoint_every=1)
+
+    resume_with_inflight([])
+    with pytest.raises(ValueError, match=re.escape(mpath)):
+        resume_with_inflight([[0, pages[5]["url"]]])
 
 
 def test_compact_and_prune_preserve_state(spark, site_df, tmp_path):

@@ -34,9 +34,8 @@ def test_salted_dispatch_equals_exact(spark, tmp_path):
     assert results["exact"] == results["salted"]
 
 
-def test_pipelined_waves_invariants(spark, tmp_path):
-    """pipeline_waves overlaps fetch+parse with processing; scores lag a
-    wave, so ordering may differ from exact mode — but the crawl must hit
+def test_frontier_driven_crawl_invariants(spark, tmp_path):
+    """A crawl whose frontier drives every wave after the first must hit
     the limit, never dispatch a URL twice, and keep the seen discipline."""
     pages = gen_pages(SPEC)
     df = spark.createDataFrame(
@@ -50,14 +49,13 @@ def test_pipelined_waves_invariants(spark, tmp_path):
         allhosts=True,
         budget=4,
         respect_robots=False,
-        pipeline_waves=True,
     )
-    c = SparkCrawler(spark, cfg, df, str(tmp_path / "pipe"), checkpoint_every=4)
+    c = SparkCrawler(spark, cfg, df, str(tmp_path / "frontier"), checkpoint_every=4)
     r = c.run()
     assert r.processed >= cfg.limit
     # duplicates may exist ONLY via the reference's initial-seed re-link
     # quirk (a seed is never in `seen`, so it can be re-enqueued once —
-    # Gather.scala:126 quirk (a), preserved in both modes)
+    # Gather.scala:126 quirk (a))
     from collections import Counter
 
     for url, n in Counter(r.dispatched).items():

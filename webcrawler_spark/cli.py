@@ -41,7 +41,6 @@ def build_parser() -> argparse.ArgumentParser:
     # scale knobs
     p.add_argument("--budget", type=int, default=1, help="pages per wave (1 = oracle mode)")
     p.add_argument("--per-host-budget", type=int, default=0)
-    p.add_argument("--bloom", action="store_true", help="bloom seen-prefilter (alias for --seen-filter bloom)")
     p.add_argument("--seen-filter", choices=["exact", "bloom", "cuckoo"], default="exact",
                    help="URL-seen membership strategy (cuckoo supports expiry)")
     p.add_argument("--checkpoint-every", type=int, default=8)
@@ -56,9 +55,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--fold-mode", choices=["exact", "bounded"], default="exact",
                    help="wave fold: exact (reference-faithful driver fold) or "
                         "bounded (distributed running average, the 10^10 path)")
-    p.add_argument("--pipeline-waves", action="store_true",
-                   help="overlap wave N+1 fetch+parse with wave N processing "
-                        "(scores lag one wave — the servers=2*budget equivalence)")
     p.add_argument("--export", action="store_true", help="write GML/statistics/vectors at end")
     p.add_argument("--master", default=None, help="override master (default: from spark-submit)")
     p.add_argument("--shuffle-partitions", type=int, default=None)
@@ -231,13 +227,11 @@ def main(argv: list[str] | None = None) -> int:
         shuffle_seed=args.shuffle_seed,
         budget=args.budget,
         per_host_budget=args.per_host_budget,
-        use_bloom_seen=args.bloom,
         seen_filter=args.seen_filter,
         dump_every=args.dump_every,
         sample_every=args.sample_every,
         sample_max_links=args.sample_max_links,
         fold_mode=args.fold_mode,
-        pipeline_waves=args.pipeline_waves,
     )
     pages = spark.read.parquet(args.pages)
     robots = spark.read.parquet(args.robots) if args.robots else None

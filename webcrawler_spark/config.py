@@ -45,11 +45,6 @@ class CrawlConfig:
     #: nominal wall-clock per wave used to translate robots crawl_delay_ms
     #: into a per-host wave cap: cap(host) = wave_period_ms / crawl_delay_ms
     wave_period_ms: int = 10_000
-    #: overlap wave N+1's fetch+parse with wave N's fold/merge/commit:
-    #: dispatch uses the pre-merge frontier, so priorities lag one wave —
-    #: the documented approximation equivalent to the reference with
-    #: servers = 2*budget. Off by default (exact wave semantics).
-    pipeline_waves: bool = False
     #: wave fold strategy. "exact": collect every page's full term vector
     #: and replay the reference's sequential estimator bit-exactly (the
     #: budget=1 oracle-parity mode; collects O(wave · |page vocab|)).
@@ -76,12 +71,10 @@ class CrawlConfig:
     #: cap on |factor| entries broadcast to executors (0 = unlimited);
     #: bounds broadcast size at huge vocab scale
     factor_top_m: int = 0
-    #: partitioned-bloom prefilter in front of the exact URL-seen anti-join
-    #: (the 10^10-scale path; exact semantics either way — no false negatives)
-    use_bloom_seen: bool = False
-    #: seen-filter kind: "exact" (anti-join only), "bloom", or "cuckoo"
-    #: (deletable fingerprints — recrawl-window expiry); use_bloom_seen is
-    #: the older alias for seen_filter="bloom"
+    #: seen-filter kind: "exact" (anti-join only), "bloom" (partitioned
+    #: bloom prefilter in front of the anti-join — the 10^10-scale path;
+    #: exact semantics either way, no false negatives), or "cuckoo"
+    #: (deletable fingerprints — recrawl-window expiry)
     seen_filter: str = "exact"
     bloom_buckets: int = 64
     bloom_bits_per_bucket: int = 1 << 20

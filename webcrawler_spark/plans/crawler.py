@@ -297,7 +297,6 @@ class SparkCrawler:
         self.rng = random.Random(cfg.shuffle_seed)
         self.stopped = False
         self.result = CrawlResult()
-        self._resumed = False
 
         # distributed state ---------------------------------------------------
         s = spark
@@ -349,11 +348,6 @@ class SparkCrawler:
         #: overwrites for delete-key tracking. Fixed-size (not O(history));
         #: false positives only pend no-op delete keys
         self._page_seen = _DriverBloom(expected=max(cfg.limit, 1 << 10))
-        #: pipeline_waves: the batch dispatched for wave N+1 but not yet
-        #: processed when wave N commits. Dispatch already eliminated these
-        #: URLs from the committed frontier, so the commit must carry them
-        #: or a crash-resume silently never crawls them.
-        self._inflight: list[tuple[int, str]] = []
         #: S9 sampler: link-priority updates since crawl start; a sample
         #: matrix is dumped each time it crosses a cfg.sample_every multiple
         self._sampler_nseed = 0
@@ -421,8 +415,6 @@ class SparkCrawler:
         # bloom (OR-mergeable) or cuckoo (deletable fingerprints)
         self.bloom = None
         kind = cfg.seen_filter
-        if cfg.use_bloom_seen and kind == "exact":
-            kind = "bloom"
         if kind == "bloom":
             from webcrawler_spark.sources.bloom import PartitionedBloom
 
@@ -434,9 +426,8 @@ class SparkCrawler:
 
             self.bloom = PartitionedCuckoo(n_shards=cfg.bloom_buckets)
 
-        #: per-phase wall-clock accumulators (SPARK_CRAWLER_PROFILE=1 to print)
+        #: per-phase wall-clock accumulators
         self.timings: dict[str, float] = defaultdict(float)
-        self._profile = os.environ.get("SPARK_CRAWLER_PROFILE") == "1"
         #: bounded partition count for state snapshots — unions concatenate
         #: partitions, so without a coalesce the state tables would gain
         #: O(waves) partitions and every job would degrade to thousands of
@@ -605,9 +596,7 @@ class SparkCrawler:
     # ------------------------------------------------------------------
     def _fetch_parse(self, batch: list[tuple[int, str]]) -> DataFrame:
         """S1/P1-P6: fetch-join the broadcast batch against ``pages`` and
-        run the single parse pass. Touches only the immutable pages table,
-        so it is safe to run concurrently with the previous wave's
-        processing (pipeline mode)."""
+        run the single parse pass."""
         import pandas as pd
 
         batch_df = F.broadcast(
@@ -638,19 +627,7 @@ class SparkCrawler:
                 .localCheckpoint()
             )
 
-    def _prefetch(self, batch: list[tuple[int, str]]) -> DataFrame:
-        """Pipeline-mode fetch+parse of the NEXT wave, tagged into its own
-        FAIR scheduler pool so it shares cores with (instead of starving)
-        the current wave's jobs. A no-op tag under FIFO scheduling."""
-        self.spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", "prefetch"
-        )
-        try:
-            return self._fetch_parse(batch)
-        finally:
-            self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
-
-    def _run_wave(self, batch: list[tuple[int, str]], parsed: DataFrame | None = None):
+    def _run_wave(self, batch: list[tuple[int, str]]):
         cfg, spark = self.cfg, self.spark
         self.result.dispatched.extend(u for _, u in batch)
         # dispatch order is durable TABLE state (ord = global dispatch
@@ -676,8 +653,7 @@ class SparkCrawler:
         #: dispatch ranks this wave are in [0, _wave_nb) — the contiguous
         #: bucketing domain for distributed first-seen id assignment
         self._wave_nb = max(1, len(batch))
-        if parsed is None:
-            parsed = self._fetch_parse(batch)
+        parsed = self._fetch_parse(batch)
         # background hot-table materialization (previous wave) must be
         # swapped in before the chains below read those tables
         self._ckpt_fence()
@@ -730,11 +706,8 @@ class SparkCrawler:
                 # the seed vocabulary is bounded, so its scalars are driver-
                 # computed — from here on only the background pool updates them
                 central = self.central_acc.normal
-                rows = list(central.d.items())
-                seed_df = (
-                    spark.createDataFrame(rows, "word string, val double")
-                    if rows
-                    else spark.createDataFrame([], "word string, val double")
+                seed_df = spark.createDataFrame(
+                    list(central.d.items()), "word string, val double"
                 )
                 self._pend("avg_sum", seed_df)
                 self._set("avg_sum", seed_df)
@@ -1475,8 +1448,6 @@ class SparkCrawler:
             fn = SparseVector(dict(top[: self.cfg.factor_top_m]), self.cfg.accuracy)
         factor_df = F.broadcast(
             self.spark.createDataFrame(list(fn.d.items()), "word string, w double")
-            if fn.d
-            else self.spark.createDataFrame([], "word string, w double")
         )
         self._calculate_apply(factor_df, broadcast_ids=True)
         self.pfactor = factor
@@ -1493,12 +1464,7 @@ class SparkCrawler:
         acc = cfg.accuracy
         spark = self.spark
         n_avg = math.sqrt(self._avg_norm_sqr)
-        t_rows = list(t.d.items())
-        t_df = (
-            spark.createDataFrame(t_rows, "word string, tw double")
-            if t_rows
-            else spark.createDataFrame([], "word string, tw double")
-        )
+        t_df = spark.createDataFrame(list(t.d.items()), "word string, tw double")
         if n_avg > 0.0:
             f1 = (
                 avg_df
@@ -1515,11 +1481,7 @@ class SparkCrawler:
         # words of t outside the average's support are driver-known:
         # supp(t) is inside the frozen view's restricted support
         extra = [(w, x) for w, x in t.d.items() if w not in frozen.a]
-        f2 = (
-            spark.createDataFrame(extra, "word string, f double")
-            if extra
-            else spark.createDataFrame([], "word string, f double")
-        )
+        f2 = spark.createDataFrame(extra, "word string, f double")
         fct_df = f1.unionByName(f2).filter(F.abs(F.col("f")) >= acc)
         fct_norm = frozen.factor_view(t).norm
         if fct_norm == 0.0:
@@ -1628,6 +1590,20 @@ class SparkCrawler:
                 self._avg_norm_sqr, self._avg_pruned_sqr = avg_scalars
         self._postckpt_elim = []
 
+    def _avg_scalars(self, avg: DataFrame) -> tuple[float, float]:
+        """‖Σv‖² and ‖Â₀‖² (Σv/‖Σv‖ after the accuracy prune) of an
+        avg_sum table — two narrow full scans, no shuffle."""
+        nsq = (avg.agg(F.sum(F.col("val") * F.col("val"))).first()[0]) or 0.0
+        n = math.sqrt(nsq)
+        if n == 0.0:
+            return nsq, 0.0
+        psq = (
+            avg.filter(F.abs(F.col("val")) >= F.lit(self.cfg.accuracy * n))
+            .agg(F.sum(F.col("val") * F.col("val") / F.lit(nsq)))
+            .first()[0]
+        ) or 0.0
+        return nsq, psq
+
     def _checkpoint_inner(self, force: bool = False):
         # in-memory lineage truncation runs EVERY wave (commit waves too).
         # ALL hot tables (frontier/net_edges included, round 4) materialize
@@ -1650,7 +1626,6 @@ class SparkCrawler:
         if self.wave % 4 == 0:
             for n in _COLD_TABLES:
                 snap[n] = self._t(n)
-        acc = self.cfg.accuracy
 
         def _ckpt_job(df):
             # low-priority FAIR pool ('ckpt'): background jobs yield to the
@@ -1677,25 +1652,11 @@ class SparkCrawler:
             with ThreadPoolExecutor(max_workers=bg_width) as ex:
                 futs = {n: ex.submit(_ckpt_job, df) for n, df in snap.items()}
                 out = {n: f.result() for n, f in futs.items()}
-            scalars = None
-            if "avg_sum" in out:
-                # the two average scalars the next wave's fold needs —
-                # computed here, off the critical path, on the freshly
-                # materialized table (two narrow full scans, no shuffle)
-                nsq = (
-                    out["avg_sum"].agg(F.sum(F.col("val") * F.col("val")))
-                    .first()[0]
-                ) or 0.0
-                n = math.sqrt(nsq)
-                psq = 0.0
-                if n > 0.0:
-                    psq = (
-                        out["avg_sum"]
-                        .filter(F.abs(F.col("val")) >= F.lit(acc * n))
-                        .agg(F.sum(F.col("val") * F.col("val") / F.lit(nsq)))
-                        .first()[0]
-                    ) or 0.0
-                scalars = (nsq, psq)
+            # the two average scalars the next wave's fold needs — computed
+            # here, off the critical path, on the freshly materialized table
+            scalars = (
+                self._avg_scalars(out["avg_sum"]) if "avg_sum" in out else None
+            )
             return out, scalars
 
         self._ckpt_fut = self._ckpt_pool.submit(_materialize)
@@ -1721,9 +1682,6 @@ class SparkCrawler:
             # TABLES (dispatch_log, accepted, corpus+url_ids): the manifest
             # holds only counters + the KB-sized estimator, so commit cost
             # stays O(wave) at any crawl length
-            # stopped runs abandon the pipelined batch (links stay
-            # eliminated — documented); otherwise persist it for resume
-            "inflight": [] if self.stopped else self._inflight,
             "sampler_nseed": self._sampler_nseed,
             "sampler_dumps": self._sampler_dumps,
             "metrics": {
@@ -1786,75 +1744,36 @@ class SparkCrawler:
     # main loop
     # ------------------------------------------------------------------
     def run(self, max_waves: int = 100_000, finalize: bool = True) -> CrawlResult:
+        """Wave loop. Each iteration dispatches its own batch and processes
+        it, so a stop (``stopped`` or ``max_waves``) never leaves a batch
+        that was eliminated from the frontier but not processed: every
+        commit's frontier still holds every unfetched link."""
         cfg = self.cfg
-        if self._resumed:
-            # a batch in flight at the last commit resumes first — it was
-            # already eliminated from the committed frontier
-            batch = self._inflight or self._dispatch()
-        else:
-            batch = list(enumerate(cfg.seeds))
-        parsed: DataFrame | None = None
-        next_batch: list[tuple[int, str]] | None = None
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        pool = _TPE(max_workers=1) if cfg.pipeline_waves else None
-        try:
-            while batch and not self.stopped and self.result.waves < max_waves:
-                fut = None
-                if pool is not None:
-                    # pipeline mode: dispatch wave N+1 from the PRE-merge
-                    # frontier (scores lag one wave — the documented
-                    # servers=2B approximation) and overlap its fetch+parse
-                    # with this wave's fold/merge/commit
-                    next_batch = self._dispatch()
-                    self._inflight = next_batch or []
-                    if next_batch:
-                        fut = pool.submit(self._prefetch, next_batch)
-                self._accepts_wave: list[str] = []
-                self._run_wave(batch, parsed)
-                if self._inflight == batch:
-                    self._inflight = []  # batch processed → no longer at risk
-                self._record_accepts()
-                if (
-                    cfg.dump_every > 0
-                    and self.sense is not None
-                    and self.ns // cfg.dump_every > self._dump_marks
-                ):
-                    self._dump_marks = self.ns // cfg.dump_every
-                    with self._timer("dump_snapshot"):
-                        self.export_snapshot(
-                            os.path.join(self.catalog.root, "export")
-                        )
-                self.next_ord += len(batch)
-                self._checkpoint()
-                self.wave += 1
-                self.result.waves += 1
-                if self.stopped:
-                    if fut is not None:
-                        fut.result()  # drain; links stay eliminated (documented)
-                    break
-                if fut is not None:
-                    batch, parsed = next_batch, fut.result()
-                elif pool is not None and next_batch is not None and not next_batch:
-                    # pipeline dispatch found nothing pre-merge; retry post-merge
-                    batch, parsed = self._dispatch(), None
-                else:
-                    batch, parsed = self._dispatch(), None
-                # the new batch is dispatched (eliminated from the frontier)
-                # but unprocessed: any commit before its wave completes must
-                # carry it, or a crash-resume never crawls it
-                self._inflight = batch or []
-                if not batch and self.phase == "targeting" and not self.fifo:
+        while not self.stopped and self.result.waves < max_waves:
+            # wave 0 fetches the seeds; later waves (a resumed crawl's
+            # first included) dispatch from the FIFO or the frontier
+            batch = list(enumerate(cfg.seeds)) if self.wave == 0 else self._dispatch()
+            if not batch:
+                if self.phase == "targeting" and not self.fifo:
                     self.result.aborted = True  # too little casualties (:225-229)
-                    break
-        finally:
-            if pool is not None:
-                pool.shutdown(wait=True)
+                break
+            self._accepts_wave: list[str] = []
+            self._run_wave(batch)
+            self._record_accepts()
+            if (
+                cfg.dump_every > 0
+                and self.sense is not None
+                and self.ns // cfg.dump_every > self._dump_marks
+            ):
+                self._dump_marks = self.ns // cfg.dump_every
+                with self._timer("dump_snapshot"):
+                    self.export_snapshot(os.path.join(self.catalog.root, "export"))
+            self.next_ord += len(batch)
+            self._checkpoint()
+            self.wave += 1
+            self.result.waves += 1
         if finalize:
             self.finalize()
-        if self._profile:
-            total = sum(self.timings.values())
-            print("crawler timings:", {k: round(v, 1) for k, v in sorted(self.timings.items(), key=lambda kv: -kv[1])}, f"sum={total:.1f}s", flush=True)
         return self.result
 
     def finalize(self) -> None:
@@ -1962,11 +1881,7 @@ class SparkCrawler:
         if self.sense is None:
             return
         rows = sorted(self._factor_vector().d.items(), key=lambda kv: (-kv[1], kv[0]))
-        df = (
-            self.spark.createDataFrame(rows, "word string, weight double")
-            if rows
-            else self.spark.createDataFrame([], "word string, weight double")
-        )
+        df = self.spark.createDataFrame(rows, "word string, weight double")
         # S8 decode: factor terms joined back to their first-seen ids
         df = df.join(self._t("vocab"), "word", "left")
         df.write.mode("overwrite").parquet(f"{self.catalog.root}/vocabulary")
@@ -1991,6 +1906,18 @@ class SparkCrawler:
         if m is None:
             return self
         st, w = m["state"], m["wave"]
+        # an in-flight batch was already eliminated from the committed
+        # frontier, and the full-list keys predate the dispatch_log /
+        # accepted / corpus tables: loading either would silently drop state
+        retired = [k for k in ("dispatched", "page_ids") if k in st]
+        if st.get("inflight"):
+            retired.append("inflight")
+        if retired:
+            path = os.path.join(self.catalog._wave_dir(w), "manifest.json")
+            raise ValueError(
+                f"{path}: manifest carries retired state key(s) {retired}; "
+                "it was written by an older crawler and cannot be resumed"
+            )
         self.phase = st["phase"]
         self.ns = st["ns"]
         self.next_id = st["next_id"]
@@ -2003,7 +1930,6 @@ class SparkCrawler:
         self.central_acc = SparseVector(st["central_acc"], cfg.accuracy)
         self.pfactor = SparseVector(st["pfactor"], cfg.accuracy)
         self.sense = SemanticEstimator.from_dict(st["sense"]) if st["sense"] else None
-        self._inflight = [(int(i), u) for i, u in st.get("inflight") or []]
         self._sampler_nseed = st.get("sampler_nseed", 0)
         self._sampler_dumps = st.get("sampler_dumps", 0)
         if cfg.dump_every > 0:  # no re-dump of already-passed marks
@@ -2027,40 +1953,19 @@ class SparkCrawler:
                 .localCheckpoint()
             )
             self._set("avg_sum", avg)
-            nsq = (avg.agg(F.sum(F.col("val") * F.col("val"))).first()[0]) or 0.0
-            self._avg_norm_sqr = nsq
-            n = math.sqrt(nsq)
-            self._avg_pruned_sqr = (
-                (
-                    avg.filter(F.abs(F.col("val")) >= F.lit(cfg.accuracy * n))
-                    .agg(F.sum(F.col("val") * F.col("val") / F.lit(nsq)))
-                    .first()[0]
-                    or 0.0
-                )
-                if n > 0.0
-                else 0.0
-            )
-        if "dispatched" in st:  # legacy manifests carried the full lists
-            self.result.dispatched = list(st["dispatched"])
-            self.result.accepted = list(st["accepted"])
-        else:
-            self.result.dispatched = [
-                r["url"] for r in self._t("dispatch_log").orderBy("ord").collect()
-            ]
-            self.result.accepted = [
-                r["url"] for r in self._t("accepted").orderBy("ord").collect()
-            ]
+            self._avg_norm_sqr, self._avg_pruned_sqr = self._avg_scalars(avg)
+        self.result.dispatched = [
+            r["url"] for r in self._t("dispatch_log").orderBy("ord").collect()
+        ]
+        self.result.accepted = [
+            r["url"] for r in self._t("accepted").orderBy("ord").collect()
+        ]
         # rebuild the processed-page membership filter from the corpus (a
         # superset of EPM-processed pages; extra hits only pend no-op
         # delete keys)
-        if "page_ids" in st:  # legacy
-            for u in st["page_ids"]:
-                self._page_seen.add(u)
-        else:
-            for r in self._t("corpus").select("url").collect():
-                self._page_seen.add(r["url"])
+        for r in self._t("corpus").select("url").collect():
+            self._page_seen.add(r["url"])
         if self.bloom is not None:
             # rebuild the prefilter from the snapshot's exact seen table
             self.bloom.add_df(self._t("seen"), "url")
-        self._resumed = True
         return self
