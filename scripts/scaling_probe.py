@@ -66,6 +66,18 @@ def probe(procs: int = 8, n: int = 12_000_000) -> float:
     return time.time() - t0
 
 
+def nominal_reps(reps: list[dict], post_key: str) -> tuple[float, list[dict]]:
+    """Best burn reading and the reps run at near-nominal host capacity.
+    A rep qualifies on the WORSE (max) of its two burn readings, so one
+    that became contended mid-run is filtered out. Exits with a message
+    when no rep produced a result."""
+    if not reps:
+        sys.exit("scaling_probe: all reps failed; no result to report")
+    worst = [max(x["burn_pre"], x[post_key]) for x in reps]
+    best = min(worst)
+    return best, [x for x, w in zip(reps, worst) if w <= 1.3 * best]
+
+
 def make_spark_cluster(n_exec: int, app: str):
     """A REAL multi-executor cluster on one box: ``local-cluster[N,1,m]``
     spawns N separate single-core executor JVMs (own heap, own Python
@@ -175,12 +187,7 @@ def main_confined(rounds: int, cluster: bool = False):
             )
             print(json.dumps(reps[-1]), flush=True)
 
-    best_burn = min(
-        min(x["burn_pre"], x["burn_post"]) for x in reps
-    )
-    nominal = [
-        x for x in reps if min(x["burn_pre"], x["burn_post"]) <= 1.3 * best_burn
-    ]
+    best_burn, nominal = nominal_reps(reps, "burn_post")
 
     def eff(pool):
         lo = [x for x in pool if x["cpus"] == 2]
@@ -262,10 +269,7 @@ def main():
             )
             print(json.dumps(reps[-1]), flush=True)
 
-    best_burn = min(min(x["burn_pre"], x["burn_at"]) for x in reps)
-    nominal = [
-        x for x in reps if min(x["burn_pre"], x["burn_at"]) <= 1.3 * best_burn
-    ]
+    best_burn, nominal = nominal_reps(reps, "burn_at")
 
     def eff(pool):
         lo = [x for x in pool if x["cpus"] == 2]

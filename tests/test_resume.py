@@ -46,6 +46,18 @@ def final_state(spark, crawler, res):
     return (res.dispatched, res.accepted, res.processed, seen)
 
 
+def corpus_waves(crawler):
+    return [r["wave"] for r in crawler.tables["corpus"].orderBy("ord").collect()]
+
+
+def committed(root):
+    return sorted(d for d in os.listdir(root) if d.startswith("wave="))
+
+
+#: the corpus wave column of the uninterrupted cfg_for crawl
+WAVES = [0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3]
+
+
 def test_kill_and_resume_replays_identically(spark, site_df, tmp_path):
     pages, df = site_df
     cfg = cfg_for(pages)
@@ -98,6 +110,7 @@ def test_resume_after_max_waves_stop_equals_uninterrupted(spark, site_df, tmp_pa
 
     full = SparkCrawler(spark, cfg, df, str(tmp_path / "full"), checkpoint_every=1)
     want = final_state(spark, full, full.run())
+    assert corpus_waves(full) == WAVES
 
     root = str(tmp_path / "stopped")
     c1 = SparkCrawler(spark, cfg, df, root, checkpoint_every=1)
@@ -107,10 +120,35 @@ def test_resume_after_max_waves_stop_equals_uninterrupted(spark, site_df, tmp_pa
     c2 = SparkCrawler.resume(spark, cfg, df, root, checkpoint_every=1)
     got = final_state(spark, c2, c2.run())
     assert got == want
+    # the resumed crawl numbers its waves as the uninterrupted one and
+    # commits under the same wave ids, none of them twice
+    assert corpus_waves(c2) == WAVES
+    assert committed(root) == committed(str(tmp_path / "full"))
     for d in sorted(os.listdir(root)):
         if d.startswith("wave="):
             with open(os.path.join(root, d, "manifest.json")) as f:
                 assert "inflight" not in json.load(f)["state"], d
+
+
+def test_finalize_commits_under_the_last_processed_wave(spark, site_df, tmp_path):
+    """With commits every 8 waves, a max_waves stop leaves waves 1-2
+    uncommitted: finalize commits them under wave 2 (the last one it
+    processed) and records wave 3 as the next to run; the resumed crawl
+    starts there and commits under fresh ids."""
+    pages, df = site_df
+    cfg = cfg_for(pages)
+    root = str(tmp_path / "sparse")
+    c1 = SparkCrawler(spark, cfg, df, root, checkpoint_every=8)
+    c1.run(max_waves=3)
+    assert committed(root) == ["wave=000000", "wave=000002"]
+    c1.finalize()  # nothing processed since: no new commit
+    assert committed(root) == ["wave=000000", "wave=000002"]
+
+    c2 = SparkCrawler.resume(spark, cfg, df, root, checkpoint_every=8)
+    assert c2.wave == 3
+    c2.run()
+    assert corpus_waves(c2) == WAVES
+    assert committed(root) == ["wave=000000", "wave=000002", "wave=000003"]
 
 
 def test_resume_refuses_manifest_with_in_flight_batch(spark, site_df, tmp_path):

@@ -29,9 +29,9 @@ Wave dataflow (estimating steady state):
   3. parse: one mapInPandas pass producing text/links/terms/linkctx (P1-P6);
   4. admission: host-allowlist join (D2), robots prefix filter (new
      surface), first-emitter dedup + seen anti-join (D1);
-  5. ids: first-seen dense id assignment via row_number over (dispatch
-     rank, link position) — reproduces the reference RevMap order
-     (EvaluatePriorityMatrix.scala:103-129);
+  5. ids: first-seen dense ids in (dispatch rank, link position) order
+     (dense_first_seen_ids: bucketed sort + JVM numbering) — reproduces
+     the reference RevMap order (EvaluatePriorityMatrix.scala:103-129);
   6. driver fold: the batch's term vectors stream into the semantic
      estimator in dispatch order (accept => promotion — A3/A5); new-link
      priorities = dot(emitting page vector, factor) (A6; parents are
@@ -70,6 +70,7 @@ from webcrawler_spark.functions.udfs import PARSED_SCHEMA, parse_pages
 from webcrawler_spark.kernels.urls import url_host
 from webcrawler_spark.kernels.vectors import SparseVector
 from webcrawler_spark.plans.estimators import AverageVector, SemanticEstimator
+from webcrawler_spark.plans.frames import local_frame
 from webcrawler_spark.sources.catalog import SnapshotCatalog
 
 _FRONTIER_SCHEMA = T.StructType(
@@ -205,20 +206,24 @@ def dense_first_seen_ids(
     """Distributed dense sequential numbering in exact ``(dr, pos)`` order
     (first-seen RevMap semantics, EvaluatePriorityMatrix.scala:103-129)
     WITHOUT the single-partition global-sort Window that serializes at
-    10^7-link waves. Two-phase: bucket by contiguous ``dr`` ranges (the
-    dispatch rank is in [0, nb), so bucket bounds need no sampling pass),
-    count per bucket (an O(buckets) driver collect), then assign
-    ``base + prefix_offset + within-bucket rank`` in ONE narrow vectorized
-    mapInPandas pass over the bucket-partitioned, bucket-sorted data.
+    10^7-link waves, and without a Python pass.
+
+    Rows are bucketed by contiguous ``dr`` ranges (the dispatch rank is in
+    [0, nb), so bucket bounds need no sampling pass), hash-partitioned by
+    bucket and sorted by ``(bucket, dr, pos)``; the same task then tags
+    each row with ``monotonically_increasing_id()`` and the result is
+    localCheckpointed. A bucket's rows are one contiguous run of one
+    partition, so their tags are consecutive in ``(dr, pos)`` order. One
+    O(buckets) collect gets each bucket's row count and minimum tag, and
+    the id is a narrow JVM projection over the checkpoint:
+    ``tag + (base + bucket_offset - bucket_min_tag)``, the bracketed term
+    read from a literal array indexed by bucket.
 
     ``ent`` must have columns (keep_col, dr, pos). Returns the lazy ids
-    frame (keep_col, id_name) over a localCheckpoint plus the row total.
-    Jobs: 1 checkpoint + 1 tiny counts collect — the same count as the old
-    single-task Window path, but every stage now runs wide.
+    frame (keep_col, id_name) over the checkpoint plus the row total.
+    Jobs: 1 checkpoint + 1 tiny collect; every stage runs wide, and the
+    ids frame re-reads the checkpoint with no shuffle and no Python.
     """
-    import numpy as np
-    import pandas as pd
-
     n_buckets = max(1, min(n_parts, nb))
     bkt = F.least(
         F.lit(n_buckets - 1),
@@ -228,34 +233,22 @@ def dense_first_seen_ids(
         ent.withColumn("_bkt", bkt)
         .repartition(n_buckets, "_bkt")
         .sortWithinPartitions("_bkt", "dr", "pos")
+        .withColumn("_rix", F.monotonically_increasing_id())
         .localCheckpoint()
     )
-    counts = {
-        r["_bkt"]: r["c"]
-        for r in part.groupBy("_bkt").agg(F.count("*").alias("c")).collect()
-    }
-    offs, acc = {}, 0
-    for b in sorted(counts):
-        offs[b] = acc
-        acc += counts[b]
-    total = acc
-    offs_bc = ent.sparkSession.sparkContext.broadcast(offs)
-
-    def assign(batches):
-        counters: dict[int, int] = {}
-        for pdf in batches:
-            bkts = pdf["_bkt"].to_numpy()
-            ids = np.empty(len(pdf), dtype=np.int64)
-            for b in np.unique(bkts):
-                mask = bkts == b
-                k = int(mask.sum())
-                start = offs_bc.value[int(b)] + counters.get(int(b), 0)
-                ids[mask] = base + start + np.arange(k, dtype=np.int64)
-                counters[int(b)] = counters.get(int(b), 0) + k
-            yield pd.DataFrame({keep_col: pdf[keep_col], id_name: ids})
-
-    schema = f"{keep_col} string, {id_name} long"
-    return part.mapInPandas(assign, schema), total
+    shift = [0] * n_buckets
+    total = 0
+    counts = (
+        part.groupBy("_bkt")
+        .agg(F.count("*").alias("c"), F.min("_rix").alias("m"))
+        .collect()
+    )
+    for r in sorted(counts, key=lambda r: r["_bkt"]):
+        shift[r["_bkt"]] = base + total - r["m"]
+        total += r["c"]
+    shift_arr = F.array(*[F.lit(x).cast("long") for x in shift])
+    ids = part.select(keep_col, (F.col("_rix") + shift_arr[F.col("_bkt")]).alias(id_name))
+    return ids, total
 
 
 @dataclass
@@ -299,33 +292,33 @@ class SparkCrawler:
         self.result = CrawlResult()
 
         # distributed state ---------------------------------------------------
-        s = spark
+        def empty(schema):
+            return local_frame(spark, [], schema)
+
         self.tables: dict[str, DataFrame] = {
-            "frontier": s.createDataFrame([], _FRONTIER_SCHEMA),
-            "seen": s.createDataFrame([], "url string"),
-            "url_ids": s.createDataFrame([], "url string, seed_id long"),
+            "frontier": empty(_FRONTIER_SCHEMA),
+            "seen": empty("url string"),
+            "url_ids": empty("url string, seed_id long"),
             # first-seen word dictionary (Word = Int of the reference,
             # package.scala:11; ids grown in Gather arrival order)
-            "vocab": s.createDataFrame([], "word string, word_id long"),
-            "page_terms": s.createDataFrame(
-                [], "seed_id long, word_id long, tf double"
+            "vocab": empty("word string, word_id long"),
+            "page_terms": empty("seed_id long, word_id long, tf double"),
+            "net_edges": empty("src long, dst long"),
+            "corpus": empty(
+                "ord long, seed_id long, url string, text string, wave int"
             ),
-            "net_edges": s.createDataFrame([], "src long, dst long"),
-            "corpus": s.createDataFrame(
-                [], "ord long, seed_id long, url string, text string, wave int"
+            "accepted": empty("ord long, url string"),
+            "dispatch_log": empty("ord long, url string"),
+            "gml_log": empty(
+                "ord long, url string, links array<string>, terms map<string,double>"
             ),
-            "accepted": s.createDataFrame([], "ord long, url string"),
-            "dispatch_log": s.createDataFrame([], "ord long, url string"),
-            "gml_log": s.createDataFrame(
-                [], "ord long, url string, links array<string>, terms map<string,double>"
-            ),
-            "linkctx": s.createDataFrame(
-                [], "ord long, url string, link string, feature string, weight double"
+            "linkctx": empty(
+                "ord long, url string, link string, feature string, weight double"
             ),
             # distributed running average Σ v.normal (bounded fold only;
             # the exact fold keeps the reference's driver-side
             # AverageVector). word -> running sum of normalized tf weights
-            "avg_sum": s.createDataFrame([], "word string, val double"),
+            "avg_sum": empty("word string, val double"),
         }
         #: scalars of the distributed average, refreshed by the background
         #: hot-table pool after each wave's merge: ‖Σv‖² and ‖Â₀‖² (the
@@ -364,6 +357,8 @@ class SparkCrawler:
 
         self._commit_pool = _TPE1(max_workers=1)
         self._commit_fut = None
+        #: id of the latest commit; a finalize with no wave since adds none
+        self._committed_wave: int | None = None
         #: per-wave vocab chain runs here; its barrier is deferred to the
         #: first vocab-table read (wave_vocab slice / recalc) via
         #: _await_vocab — see _run_wave
@@ -494,7 +489,8 @@ class SparkCrawler:
         # ~seconds of serial driver wall per wave; the Arrow path ships
         # one batch
         return F.broadcast(
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 pd.DataFrame({col: pd.Series(ids, dtype="int64")}),
                 f"{col} long",
             )
@@ -597,19 +593,7 @@ class SparkCrawler:
     def _fetch_parse(self, batch: list[tuple[int, str]]) -> DataFrame:
         """S1/P1-P6: fetch-join the broadcast batch against ``pages`` and
         run the single parse pass."""
-        import pandas as pd
-
-        batch_df = F.broadcast(
-            self.spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "dr": pd.Series([d for d, _ in batch], dtype="int64"),
-                        "url": [u for _, u in batch],
-                    }
-                ),
-                "dr long, url string",
-            )
-        )
+        batch_df = F.broadcast(local_frame(self.spark, batch, "dr long, url string"))
         hits = self.pages.join(batch_df, "url")
         if "content_type" in self.pages.columns:
             # MIME admission (WebGet.scala:46): only `text/html` (before
@@ -632,21 +616,11 @@ class SparkCrawler:
         self.result.dispatched.extend(u for _, u in batch)
         # dispatch order is durable TABLE state (ord = global dispatch
         # position), not manifest JSON — commits stay O(wave), VERDICT r1 #3
-        import pandas as pd
-
-        # Arrow upload — a 16k-tuple py4j createDataFrame per wave is
-        # serial driver wall (see the scaling-law notes in BASELINE.md)
         self._pend(
             "dispatch_log",
-            spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "ord": pd.Series(
-                            [self.next_ord + i for i, _ in batch], dtype="int64"
-                        ),
-                        "url": [u for _, u in batch],
-                    }
-                ),
+            local_frame(
+                spark,
+                [(self.next_ord + i, u) for i, u in batch],
                 "ord long, url string",
             ),
         )
@@ -706,8 +680,8 @@ class SparkCrawler:
                 # the seed vocabulary is bounded, so its scalars are driver-
                 # computed — from here on only the background pool updates them
                 central = self.central_acc.normal
-                seed_df = spark.createDataFrame(
-                    list(central.d.items()), "word string, val double"
+                seed_df = local_frame(
+                    spark, list(central.d.items()), "word string, val double"
                 )
                 self._pend("avg_sum", seed_df)
                 self._set("avg_sum", seed_df)
@@ -778,11 +752,9 @@ class SparkCrawler:
             # it as a local relation — every downstream broadcast join then
             # reads driver memory instead of re-running the url_ids join
             # (was: localCheckpoint + collect, two jobs per wave)
-            import pandas as pd
-
-            # Arrow round trip (toPandas down, pandas createDataFrame up):
-            # the wave-sized map is O(budget) rows and the py4j row path
-            # was per-wave serial driver wall
+            # Arrow round trip (toPandas down, local_frame up): the
+            # wave-sized map is O(budget) rows and the py4j row path was
+            # per-wave serial driver wall
             src_pdf = (
                 F.broadcast(parsed_epm.select("dr", "url"))
                 .join(self._t("url_ids"), "url")
@@ -795,7 +767,7 @@ class SparkCrawler:
                     (int(x) for x in src_pdf["src_id"]),
                 )
             )
-            src_ids = spark.createDataFrame(src_pdf, "dr long, src_id long")
+            src_ids = local_frame(spark, src_pdf, "dr long, src_id long")
             # re-fetch overwrite tracking (NetworkEstimator.scala:102): a
             # page fetched before gets its old rows delete-keyed; the wave
             # delta re-adds the fresh ones under the same stable id
@@ -830,21 +802,7 @@ class SparkCrawler:
         )
 
         # ---- new frontier rows: priority = dot(src vector, update factor) --
-        scores_df = F.broadcast(
-            spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "dr": pd.Series([d for d, _ in scores], dtype="int64"),
-                        "score": pd.Series(
-                            [s for _, s in scores], dtype="float64"
-                        ),
-                    }
-                ),
-                "dr long, score double",
-            )
-            if scores
-            else spark.createDataFrame([], "dr long, score double")
-        )
+        scores_df = F.broadcast(local_frame(spark, scores, "dr long, score double"))
         add = (
             new_links.join(scores_df, "dr")
             .join(F.broadcast(src_ids), "dr")
@@ -1173,9 +1131,7 @@ class SparkCrawler:
         if n == 0.0 or not support:
             return _FrozenAvg({}, 0.0, acc)
         sdf = F.broadcast(
-            self.spark.createDataFrame(
-                [(w,) for w in sorted(support)], "word string"
-            )
+            local_frame(self.spark, [(w,) for w in sorted(support)], "word string")
         )
         rows = (
             self._t("avg_sum")
@@ -1447,7 +1403,7 @@ class SparkCrawler:
             top = sorted(fn.d.items(), key=lambda kv: -abs(kv[1]))
             fn = SparseVector(dict(top[: self.cfg.factor_top_m]), self.cfg.accuracy)
         factor_df = F.broadcast(
-            self.spark.createDataFrame(list(fn.d.items()), "word string, w double")
+            local_frame(self.spark, list(fn.d.items()), "word string, w double")
         )
         self._calculate_apply(factor_df, broadcast_ids=True)
         self.pfactor = factor
@@ -1464,7 +1420,7 @@ class SparkCrawler:
         acc = cfg.accuracy
         spark = self.spark
         n_avg = math.sqrt(self._avg_norm_sqr)
-        t_df = spark.createDataFrame(list(t.d.items()), "word string, tw double")
+        t_df = local_frame(spark, list(t.d.items()), "word string, tw double")
         if n_avg > 0.0:
             f1 = (
                 avg_df
@@ -1477,15 +1433,15 @@ class SparkCrawler:
                 )
             )
         else:
-            f1 = spark.createDataFrame([], "word string, f double")
+            f1 = local_frame(spark, [], "word string, f double")
         # words of t outside the average's support are driver-known:
         # supp(t) is inside the frozen view's restricted support
         extra = [(w, x) for w, x in t.d.items() if w not in frozen.a]
-        f2 = spark.createDataFrame(extra, "word string, f double")
+        f2 = local_frame(spark, extra, "word string, f double")
         fct_df = f1.unionByName(f2).filter(F.abs(F.col("f")) >= acc)
         fct_norm = frozen.factor_view(t).norm
         if fct_norm == 0.0:
-            factor_df = spark.createDataFrame([], "word string, f double")
+            factor_df = local_frame(spark, [], "word string, f double")
             arg_norm = 0.0
         elif normalized:
             # drift path passed factor.normal — replicate the prune
@@ -1509,7 +1465,7 @@ class SparkCrawler:
             {r["word"]: r["f"] for r in pf_df.collect()}, acc
         )
         if arg_norm == 0.0:
-            fn_df = spark.createDataFrame([], "word string, w double")
+            fn_df = local_frame(spark, [], "word string, w double")
             self._calculate_apply(F.broadcast(fn_df), broadcast_ids=True)
             return
         fn_df = factor_df.select(
@@ -1605,6 +1561,17 @@ class SparkCrawler:
         return nsq, psq
 
     def _checkpoint_inner(self, force: bool = False):
+        # checkpoints are taken after `wave += 1`: they hold the state
+        # after wave `done`, commit under that id and record `self.wave`
+        # as the next wave to run. A forced (finalize) checkpoint with no
+        # wave processed since the last commit has nothing to add, and
+        # reusing that commit's id would overwrite it: it only waits
+        done = self.wave - 1
+        if force and done in (-1, self._committed_wave):
+            if self._commit_fut is not None:
+                self._commit_fut.result()
+                self._commit_fut = None
+            return
         # in-memory lineage truncation runs EVERY wave (commit waves too).
         # ALL hot tables (frontier/net_edges included, round 4) materialize
         # in the background, overlapped with the next wave's
@@ -1623,7 +1590,7 @@ class SparkCrawler:
         }
         # cold (export-feed) tables: lineage-truncate every 4 waves, also
         # off the critical path
-        if self.wave % 4 == 0:
+        if done % 4 == 0:
             for n in _COLD_TABLES:
                 snap[n] = self._t(n)
 
@@ -1660,7 +1627,7 @@ class SparkCrawler:
             return out, scalars
 
         self._ckpt_fut = self._ckpt_pool.submit(_materialize)
-        if not force and (self.wave % self.checkpoint_every) != 0:
+        if not force and (done % self.checkpoint_every) != 0:
             return
         import json as _json
 
@@ -1670,7 +1637,7 @@ class SparkCrawler:
             "next_id": self.next_id,
             "next_word_id": self.next_word_id,
             "next_ord": self.next_ord,
-            "wave": self.wave,
+            "next_wave": self.wave,
             "fifo": self.fifo,
             "hosts": sorted(self.hosts_set),
             "stopped": self.stopped,
@@ -1723,7 +1690,7 @@ class SparkCrawler:
         if self._commit_fut is not None:
             self._commit_fut.result()
         state = _json.loads(_json.dumps(state))
-        def _commit_job(wave=self.wave, tables=tables, state=state,
+        def _commit_job(wave=done, tables=tables, state=state,
                         modes=modes, deletes=deletes):
             # durable writes also ride the low-priority pool
             self.spark.sparkContext.setLocalProperty(
@@ -1734,6 +1701,7 @@ class SparkCrawler:
             )
 
         self._commit_fut = self._commit_pool.submit(_commit_job)
+        self._committed_wave = done
         self._pending_deltas.clear()
         self._pending_deletes.clear()
         if force:  # finalize: block until durable
@@ -1769,16 +1737,18 @@ class SparkCrawler:
                 with self._timer("dump_snapshot"):
                     self.export_snapshot(os.path.join(self.catalog.root, "export"))
             self.next_ord += len(batch)
-            self._checkpoint()
             self.wave += 1
             self.result.waves += 1
+            self._checkpoint()
         if finalize:
             self.finalize()
         return self.result
 
     def finalize(self) -> None:
         """Durable snapshot commit + vocabulary sink (separate from the
-        wave loop so callers can account commit cost independently)."""
+        wave loop so callers can account commit cost independently). The
+        commit goes under the last processed wave's id; when that wave was
+        already committed in the loop, finalize only waits for it."""
         self._checkpoint(force=True)
         self._write_vocabulary()
         # drain the background materialization before the caller may stop
@@ -1788,7 +1758,7 @@ class SparkCrawler:
     def _record_accepts(self):
         if self._accepts_wave:
             rows = [(self.next_ord + i, u) for i, u in enumerate(self._accepts_wave)]
-            acc_delta = self.spark.createDataFrame(rows, "ord long, url string")
+            acc_delta = local_frame(self.spark, rows, "ord long, url string")
             self._pend("accepted", acc_delta)
             self._set("accepted", self._t("accepted").unionByName(acc_delta))
 
@@ -1881,7 +1851,7 @@ class SparkCrawler:
         if self.sense is None:
             return
         rows = sorted(self._factor_vector().d.items(), key=lambda kv: (-kv[1], kv[0]))
-        df = self.spark.createDataFrame(rows, "word string, weight double")
+        df = local_frame(self.spark, rows, "word string, weight double")
         # S8 decode: factor terms joined back to their first-seen ids
         df = df.join(self._t("vocab"), "word", "left")
         df.write.mode("overwrite").parquet(f"{self.catalog.root}/vocabulary")
@@ -1923,7 +1893,10 @@ class SparkCrawler:
         self.next_id = st["next_id"]
         self.next_word_id = st.get("next_word_id", 1)
         self.next_ord = st["next_ord"]
-        self.wave = w + 1
+        # manifests written before `next_wave` existed were all taken
+        # right after wave `w`
+        self.wave = st.get("next_wave", w + 1)
+        self._committed_wave = w
         self.fifo = list(st["fifo"])
         self.hosts_set = set(st.get("hosts", []))
         self.stopped = st["stopped"]

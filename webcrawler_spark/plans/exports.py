@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from webcrawler_spark.kernels.urls import seed_to_filename
 from webcrawler_spark.kernels.vectors import SparseVector
+from webcrawler_spark.plans.frames import local_frame
 
 
 def _num(x: float) -> str:
@@ -48,11 +49,13 @@ def gml_ids(gml_log: DataFrame) -> DataFrame:
     independently from the estimator's ids, fed the same stream): first-seen
     order over (event ord, position), page url at pos -1 before its links.
 
-    Id assignment reuses the crawler's two-phase distributed numbering
+    Id assignment reuses the crawler's distributed numbering
     (dense_first_seen_ids) instead of a global Window.orderBy — a global
     row_number funnels the whole url universe through ONE task, which at
     a 10^8-node graph is the single-task sort the wave engine already
-    eliminated. Buckets are contiguous ``ord`` ranges.
+    eliminated. Buckets are contiguous ``ord`` ranges; the returned frame
+    is a JVM projection over a bucket-sorted checkpoint, so the in-loop
+    snapshot dump (``export_snapshot``) reads it without Python tasks.
 
     Returns (url, gid)."""
     from webcrawler_spark.plans.crawler import dense_first_seen_ids
@@ -66,7 +69,7 @@ def gml_ids(gml_log: DataFrame) -> DataFrame:
     )
     max_ord = gml_log.agg(F.max("ord")).first()[0]
     if max_ord is None:
-        return gml_log.sparkSession.createDataFrame([], "url string, gid long")
+        return local_frame(gml_log.sparkSession, [], "url string, gid long")
     ent = firsts.select(
         F.col("u").alias("url"),
         F.col("fp.ord").alias("dr"),
@@ -104,12 +107,7 @@ def gml_matrix(gml_log: DataFrame, ids: DataFrame) -> tuple[DataFrame, DataFrame
 
 
 def _vec_df(spark, vec: SparseVector, name: str) -> DataFrame:
-    rows = list(vec.items())
-    return (
-        spark.createDataFrame(rows, f"word string, {name} double")
-        if rows
-        else spark.createDataFrame([], f"word string, {name} double")
-    )
+    return local_frame(spark, list(vec.items()), f"word string, {name} double")
 
 
 def node_annotations(

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from webcrawler_spark.plans.frames import local_frame
+
 
 def read_vectors_export(
     spark: SparkSession, root: str
@@ -73,8 +75,8 @@ def read_vectors_export(
         )
         if out in known
     ]
-    vectors = spark.createDataFrame(vec_rows, "id long, words array<string>")
-    edges = spark.createDataFrame(edge_rows, "src long, dst long")
+    vectors = local_frame(spark, vec_rows, "id long, words array<string>")
+    edges = local_frame(spark, edge_rows, "src long, dst long")
     return vectors, edges
 
 
@@ -93,8 +95,9 @@ def build_pairs(
     n_edges = edges.count()
     n_ids = ids.count()
     if n_ids == 0 or n_edges == 0:
-        return vectors.sparkSession.createDataFrame(
-            [], "w1 array<string>, w2 array<string>, haslink boolean, pid long"
+        return local_frame(
+            vectors.sparkSession, [],
+            "w1 array<string>, w2 array<string>, haslink boolean, pid long",
         )
     # negatives: deterministic pseudo-random id pairs, anti-joined vs edges
     # (TuneVocabulary.scala:47 `filterNot(m contains _)` — the anti-join
@@ -143,21 +146,12 @@ def build_pairs(
     )
 
 
-def _net_df(spark: SparkSession, net: dict[str, float]) -> DataFrame:
-    rows = list(net.items())
-    return (
-        spark.createDataFrame(rows, "word string, nw double")
-        if rows
-        else spark.createDataFrame([], "word string, nw double")
-    )
-
-
 def learn_epoch(
     pairs: DataFrame, net: dict[str, float]
 ) -> tuple[dict[str, float], int]:
     """L3 one epoch (learnstage :29-39): returns (new net, error count)."""
     spark = pairs.sparkSession
-    net_b = F.broadcast(_net_df(spark, net))
+    net_b = F.broadcast(local_frame(spark, list(net.items()), "word string, nw double"))
     # pair ids must be STABLE across the two jobs below (score + delta).
     # build_pairs supplies a deterministic content/provenance pid; the
     # fallback below only serves ad-hoc callers that hand-build pairs,

@@ -45,7 +45,6 @@ class PartitionedBloom:
         self.m = bits_per_bucket  # bits per bucket
         self.k = k
         self.buckets: dict[int, np.ndarray] = {}  # bucket -> uint8 bitmap
-        self.n_added = 0
 
     # -- build -----------------------------------------------------------
     def add_df(self, df: DataFrame, col: str = "url"):
@@ -81,7 +80,6 @@ class PartitionedBloom:
                 self.buckets[b] = self.buckets[b] | bm
             else:
                 self.buckets[b] = bm.copy()
-        self.n_added += df.count()
 
     # -- query -----------------------------------------------------------
     def might_contain_udf(self, spark):

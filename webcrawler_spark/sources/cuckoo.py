@@ -65,7 +65,6 @@ class PartitionedCuckoo:
         self.max_kicks = max_kicks
         # shard -> (m, slots) uint16 table; 0 = empty
         self.tables: dict[int, np.ndarray] = {}
-        self.n_added = 0
         self.n_overflow = 0  # keys that could not be placed (fall back exact)
 
     # -- hashing ---------------------------------------------------------
@@ -168,7 +167,6 @@ class PartitionedCuckoo:
                 np.frombuffer(r["table"], dtype=np.uint16).reshape(self.m, self.slots).copy()
             )
             self.n_overflow += r["overflow"]
-        self.n_added += df.count()
         bc.destroy()
 
     def delete_df(self, df: DataFrame, col: str = "url"):
