@@ -12,6 +12,7 @@ thin driver-facing adapter.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -21,6 +22,19 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from webcrawler_spark import queries as _q  # noqa: E402
+from webcrawler_spark.session import ship_package  # noqa: E402
+
+
+def _shipped(fn: Callable[[SparkSession, str], DataFrame]):
+    """``fn`` with the package put on the caller's Python workers first:
+    the caller's session need not run inside this checkout."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        ship_package(spark)
+        return fn(spark, sf_dir)
+
+    return run
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -51,7 +65,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (and the
     training-data-pipeline surface). Each callable takes (spark, sf_dir)
     and returns a DataFrame with columns aliased to match ``oracle_sql``."""
-    return _q.queries()
+    return {name: _shipped(fn) for name, fn in _q.queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:

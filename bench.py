@@ -5,16 +5,13 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 Headline metric (BASELINE.json): frontier-expansion throughput —
 URLs scheduled+fetched per second — on a synthetic Common-Crawl-style
 ``pages`` table under a fixed seed list + politeness budget, plus
-per-query seconds for the analytic operator suite at the sf dir.
+per-query seconds for the analytic operator suite at the sf dir. Each
+crawl rep also reports its Spark jobs and stages per wave and the
+crawler's per-phase wall clock. The query pass runs in a session of its
+own, after the crawl session stops.
 
-``--scaling`` mode runs the same crawl at two parallelism levels on the
-same input and reports throughput at both plus scaling efficiency (the
-sandbox stand-in for N vs 4N executors). The default pair is
-local[2] -> local[8] — the gate instantiation of record (BASELINE.md
-§scaling: both levels run with full hardware headroom, whereas 8 -> 32
-is capped ~0.64 by the host itself, measured with a zero-coordination
-pure-Python burn). Override with SPARK_GRAFT_SCALING_LEVELS="8,32" to
-reproduce the host-ceiling measurement.
+Scaling (N vs 4N executors) is measured by ``scripts/scaling_probe.py``,
+which runs ``crawl_bench`` under a host-capacity burn check.
 """
 
 from __future__ import annotations
@@ -263,62 +260,20 @@ PER_HOST_BUDGET = int(os.environ.get("SPARK_GRAFT_PER_HOST_BUDGET", "2048"))
 FOLD_MODE = os.environ.get("SPARK_GRAFT_FOLD_MODE", "bounded")
 
 
-_FAIR_POOLS_PATH: str | None = None
-
-
-def _fair_pools_file() -> str:
-    """FAIR pool weights: in-path wave jobs (default pool) outweigh the
-    background hot-table materialization and durable commits ('ckpt') —
-    without this, FAIR's equal shares let the 4-way background
-    checkpoint burst starve the dispatch top-k (measured 9 s -> 22.6 s
-    for the phase across a 6-wave run). Written ONCE per process to a
-    fixed temp path (ADVICE r4: a fresh NamedTemporaryFile per
-    make_spark leaked one XML per session)."""
-    global _FAIR_POOLS_PATH
-    if _FAIR_POOLS_PATH is not None:
-        return _FAIR_POOLS_PATH
-
-    xml = """<?xml version="1.0"?>
-<allocations>
-  <pool name="default"><schedulingMode>FIFO</schedulingMode><weight>8</weight><minShare>8</minShare></pool>
-  <pool name="ckpt"><schedulingMode>FIFO</schedulingMode><weight>1</weight><minShare>0</minShare></pool>
-</allocations>
-"""
-    import atexit
-
-    f = tempfile.NamedTemporaryFile(
-        "w", suffix="_fairscheduler.xml", delete=False
-    )
-    f.write(xml)
-    f.close()
-    _FAIR_POOLS_PATH = f.name
-    atexit.register(lambda: os.path.exists(f.name) and os.unlink(f.name))
-    return _FAIR_POOLS_PATH
-
-
 def make_spark(cpus: int, app: str):
-    from pyspark.sql import SparkSession
+    from webcrawler_spark.session import make_session
 
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app)
-        .config("spark.scheduler.allocation.file", _fair_pools_file())
-        # shuffle width decoupled from core count: the crawl state
-        # shuffles are small; oversized widths only multiply tiny tasks
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        # the background hot-table materialization and durable commits
-        # run concurrently with the wave's in-path jobs; under FIFO their
-        # jobs would take task slots ahead of the next dispatch top-k —
-        # FAIR with the low-weight 'ckpt' pool lets the wave jobs go first
-        .config("spark.scheduler.mode", "FAIR")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    return make_session(
+        app,
+        f"local[{cpus}]",
+        {
+            # shuffle width decoupled from core count: the crawl state
+            # shuffles are small; oversized widths only multiply tiny tasks
+            "spark.sql.shuffle.partitions": 16,
+            "spark.driver.memory": "48g",
+            "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+        },
     )
 
 
@@ -381,12 +336,20 @@ def crawl_bench(spark, workdir: str, pages=None) -> dict:
         dump_every=0,
         fold_mode=FOLD_MODE,
     )
+    st = spark.sparkContext.statusTracker()
+    jobs_before = set(st.getJobIdsForGroup())
     t0 = time.time()
     # durable O(wave) delta commits every 2 waves INSIDE the measured
     # window — the steady-state loop includes its own durability
     crawler = SparkCrawler(spark, cfg, pages, workdir, checkpoint_every=2)
     res = crawler.run(max_waves=64, finalize=False)
     dt = time.time() - t0  # steady-state frontier-expansion window
+    jobs = sorted(set(st.getJobIdsForGroup()) - jobs_before)
+    n_stages = sum(
+        len(info.stageIds)
+        for info in map(st.getJobInfo, jobs)
+        if info is not None
+    )
     t1 = time.time()
     crawler.finalize()  # durable snapshot commit, amortized in production
     commit_sec = time.time() - t1
@@ -394,6 +357,7 @@ def crawl_bench(spark, workdir: str, pages=None) -> dict:
     scheduled = crawler.next_id - 1  # URLs that entered the id space/frontier
     if owns_pages:
         pages.unpersist()
+    waves = max(res.waves, 1)
     return {
         "n_pages_input": n_pages,
         "fetched": fetched,
@@ -403,6 +367,14 @@ def crawl_bench(spark, workdir: str, pages=None) -> dict:
         "crawl_sec": round(dt, 2),
         "commit_sec": round(commit_sec, 2),
         "urls_per_sec": round((fetched + scheduled) / dt, 2),
+        # the crawl window's Spark jobs (background commits included) and
+        # the crawler's own phase clocks: serial per-wave cost vs work
+        "jobs_per_wave": round(len(jobs) / waves, 1),
+        "stages_per_wave": round(n_stages / waves, 1),
+        "phase_sec": {
+            k: round(v, 2)
+            for k, v in sorted(crawler.timings.items(), key=lambda kv: -kv[1])
+        },
     }
 
 
@@ -411,18 +383,22 @@ def query_bench(spark, sf_dir: str) -> tuple[dict, dict]:
     session — includes codegen/Janino compile and any one-shot
     materialization) and warm (steady-state plan cost, the number that
     matters when the operator runs for hours at 100 TB). Both are
-    recorded so a regression is attributable to compile-vs-compute."""
+    recorded so a regression is attributable to compile-vs-compute.
+    Each run writes to the ``noop`` sink, which executes the full plan:
+    ``count()`` lets the optimizer prune projected columns, Python UDFs
+    included."""
     from webcrawler_spark.queries import REGISTRY
+
+    def timed(fn) -> float:
+        t0 = time.time()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return round(time.time() - t0, 3)
 
     cold, warm = {}, {}
     for name in HEADLINE:
         fn, _ = REGISTRY[name]
-        t0 = time.time()
-        fn(spark, sf_dir).count()  # full execution, no result transfer cost
-        cold[name] = round(time.time() - t0, 3)
-        t0 = time.time()
-        fn(spark, sf_dir).count()
-        warm[name] = round(time.time() - t0, 3)
+        cold[name] = timed(fn)
+        warm[name] = timed(fn)
     return cold, warm
 
 
@@ -444,127 +420,18 @@ def run_once(cpus: int) -> dict:
         with tempfile.TemporaryDirectory() as td:
             runs.append(crawl_bench(spark, td, pages=pages))
     pages.unpersist()
+    spark.stop()
     crawl = min(runs, key=lambda r: r["crawl_sec"])
     crawl["rep_crawl_secs"] = [r["crawl_sec"] for r in runs]
+    # the crawl's cached and checkpointed blocks leave with its session
+    spark = make_spark(cpus, f"bench_queries_{cpus}")
+    spark.sparkContext.setLogLevel("ERROR")
     cold, warm = query_bench(spark, SF_DIR)
     spark.stop()
     return {"crawl": crawl, "queries": cold, "queries_warm": warm}
 
 
-def trace_once(cpus: int) -> dict:
-    """One crawl reporting its phase wall-clock accumulators (the
-    crawler's own _timer instrumentation, ``SparkCrawler.timings``) plus Spark
-    job/stage counts — the stage-count trace behind the scaling-efficiency
-    analysis in BASELINE.md (what is serial per wave vs parallel work)."""
-    spark = make_spark(cpus, f"bench_trace_{cpus}")
-    spark.sparkContext.setLogLevel("ERROR")
-    from webcrawler_spark.config import CrawlConfig
-    from webcrawler_spark.plans.crawler import SparkCrawler
-    from webcrawler_spark.sources.synth import gen_pages_df, gen_page
-
-    spec = _bench_spec()
-    pages = gen_pages_df(spark, spec).select(*_bench_cols(spec)).persist()
-    pages.count()
-    seeds = tuple(gen_page(spec, i)["url"] for i in range(4))
-    cfg = CrawlConfig(
-        seeds=seeds, limit=CRAWL_LIMIT, targets=9, targeting=-1.0,
-        allhosts=True, budget=CRAWL_BUDGET, per_host_budget=PER_HOST_BUDGET,
-        host_salt_partitions=16, factor_top_m=256, dump_every=0,
-        fold_mode=FOLD_MODE,
-    )
-    st = spark.sparkContext.statusTracker()
-    jobs_before = set(st.getJobIdsForGroup())
-    import tempfile as _tf
-
-    with _tf.TemporaryDirectory() as td:
-        t0 = time.time()
-        crawler = SparkCrawler(spark, cfg, pages, td, checkpoint_every=2)
-        res = crawler.run(max_waves=64, finalize=False)
-        dt = time.time() - t0
-        jobs_after = set(st.getJobIdsForGroup())
-        new_jobs = sorted(jobs_after - jobs_before)
-        n_stages = 0
-        for j in new_jobs:
-            info = st.getJobInfo(j)
-            if info is not None:
-                n_stages += len(info.stageIds)
-        out = {
-            "cpus": cpus,
-            "crawl_sec": round(dt, 2),
-            "waves": res.waves,
-            "fetched": res.processed,
-            "jobs": len(new_jobs),
-            "stages": n_stages,
-            "jobs_per_wave": round(len(new_jobs) / max(res.waves, 1), 1),
-            "stages_per_wave": round(n_stages / max(res.waves, 1), 1),
-            "phase_sec": {
-                k: round(v, 2)
-                for k, v in sorted(
-                    crawler.timings.items(), key=lambda kv: -kv[1]
-                )
-            },
-        }
-        crawler.finalize()
-    pages.unpersist()
-    spark.stop()
-    return out
-
-
 def main():
-    if "--trace" in sys.argv:
-        print(json.dumps(trace_once(CPUS)))
-        return
-    if "--scaling" in sys.argv:
-        # N vs 4N parallelism on identical input. The sandbox host shows
-        # spiky steal time (measured 2.4x wall spread across identical
-        # back-to-back reps), so run REPS per level and keep the best rep
-        # (min wall) — the only robust estimator of machine capacity here.
-        reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "4"))
-        # the N vs 4N pair: default local[2] -> local[8]. This is the
-        # honest instantiation on this box: both levels run with full
-        # hardware headroom (2+8 threads << 32 cores), whereas 8 -> 32
-        # is physically capped ~0.64 by the host (a zero-coordination
-        # pure-Python multiprocessing burn measures the same ceiling —
-        # BASELINE.md session-5) and measures the machine, not the
-        # engine. Override with SPARK_GRAFT_SCALING_LEVELS="8,32" to
-        # reproduce the ceiling measurement.
-        lo, hi = (
-            int(x)
-            for x in os.environ.get("SPARK_GRAFT_SCALING_LEVELS", "2,8").split(",")
-        )
-        results = {}
-        for cpus in (lo, hi):
-            spark = make_spark(cpus, f"bench_scaling_{cpus}")
-            spark.sparkContext.setLogLevel("ERROR")
-            from webcrawler_spark.sources.synth import gen_pages_df
-
-            # one materialized input per level — identical bytes across
-            # reps, generation outside every measured window
-            spec = _bench_spec()
-            pages = gen_pages_df(spark, spec).select(*_bench_cols(spec)).persist()
-            runs = []
-            for _ in range(reps):
-                with tempfile.TemporaryDirectory() as td:
-                    runs.append(crawl_bench(spark, td, pages=pages))
-            pages.unpersist()
-            spark.stop()
-            best = min(runs, key=lambda r: r["crawl_sec"])
-            best["rep_crawl_secs"] = [r["crawl_sec"] for r in runs]
-            results[cpus] = best
-        eff = (results[hi]["urls_per_sec"] / results[lo]["urls_per_sec"]) / (hi / lo)
-        print(
-            json.dumps(
-                {
-                    "metric": f"scaling efficiency local[{lo}] -> local[{hi}]",
-                    "value": round(eff, 3),
-                    "unit": "ratio",
-                    f"local{lo}": results[lo],
-                    f"local{hi}": results[hi],
-                }
-            )
-        )
-        return
-
     res = run_once(CPUS)
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     out = {

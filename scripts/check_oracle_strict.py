@@ -1,7 +1,7 @@
 """Dtype-strict local stand-in for the driver's correctness gate.
 
-Differences from scripts/check_oracle.py (the lenient comparator that let
-round-3's two oracle dtype bugs ship):
+It replaced a lenient comparator (since deleted) that let round-3's two
+oracle dtype bugs ship. It is:
 
 * **Type-strict**: every output column's type must match between Spark and
   DuckDB at exact width (int32 vs int64, float32 vs float64, decimal(p,s)).
@@ -211,6 +211,8 @@ def main():
 
     from pyspark.sql import SparkSession
 
+    # not webcrawler_spark.session: this stands in for the correctness
+    # gate's own session (no Arrow, no coalescing), not the product's
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('CHECK_CPUS', '8')}]")
         .appName("check_oracle_strict")

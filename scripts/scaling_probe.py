@@ -88,8 +88,7 @@ def make_spark_cluster(n_exec: int, app: str):
     sizes), so driver memory/cores are identical in both legs."""
     import shutil
 
-    from pyspark.sql import SparkSession
-    import bench
+    from webcrawler_spark.session import make_session
 
     # the north rule's deployment: the package ships to executors as a
     # --py-files zip (local[*] shares the driver's sys.path; a REAL
@@ -99,23 +98,19 @@ def make_spark_cluster(n_exec: int, app: str):
         os.path.join(tempfile.gettempdir(), "webcrawler_spark_pyfiles"),
         "zip", root_dir=root, base_dir="webcrawler_spark",
     )
-    spark = (
-        SparkSession.builder.master(f"local-cluster[{n_exec},1,10240]")
-        .appName(app)
-        .config("spark.scheduler.allocation.file", bench._fair_pools_file())
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # heavy ~100 KB pages: bound Arrow batch memory on 1-core executors
-        # (default 10k records/batch is a ~1 GB allocation spike -> exit 52)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.scheduler.mode", "FAIR")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = make_session(
+        app,
+        f"local-cluster[{n_exec},1,10240]",
+        {
+            "spark.sql.shuffle.partitions": 16,
+            # heavy ~100 KB pages: bound Arrow batch memory on 1-core
+            # executors (default 10k records/batch is a ~1 GB allocation
+            # spike -> exit 52)
+            "spark.sql.execution.arrow.maxRecordsPerBatch": 512,
+            "spark.driver.memory": "16g",
+            "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+        },
     )
     spark.sparkContext.addPyFile(zip_path)
     return spark

@@ -8,26 +8,22 @@ resolve is from the zip shipped with --py-files — the printed module
 path proves it.
 
 Usage (see scripts/submit_smoke.sh):
-    spark-submit --master local[4] --py-files engine.zip submit_main.py
+    spark-submit --master local[4] --conf spark.sql.shuffle.partitions=8 \
+        --py-files engine.zip submit_main.py
 """
 
 import json
 import sys
 
-from pyspark.sql import SparkSession
+import webcrawler_spark
+from webcrawler_spark.session import make_session
 
 
 def main() -> int:
-    spark = (
-        SparkSession.builder.appName("webcrawler-spark-submit-smoke")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    # master and shuffle width come from the spark-submit command line
+    spark = make_session("webcrawler-spark-submit-smoke")
     spark.sparkContext.setLogLevel("WARN")
 
-    import webcrawler_spark
     from webcrawler_spark.config import CrawlConfig
     from webcrawler_spark.plans.crawler import SparkCrawler
     from webcrawler_spark.sources.synth import (

@@ -8,19 +8,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from webcrawler_spark.session import make_session
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("webcrawler_spark_tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    s = make_session(
+        "webcrawler_spark_tests",
+        "local[4]",
+        {
+            "spark.sql.shuffle.partitions": 4,
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "8g",
+        },
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -99,3 +99,26 @@ def test_engine_matches_oracle_cluster_policy(spark, site, pages_df, tmp_path):
     engine = SparkCrawler(spark, cfg, pages_df, root, checkpoint_every=50).run()
     assert engine.dispatched == oracle.dispatched
     assert engine.accepted == oracle.accepted
+
+
+def test_state_writes_raise_while_materialization_in_flight(
+    spark, site, pages_df, tmp_path
+):
+    """The fence swaps in every table of the in-flight background
+    snapshot, so any write to one in that window would be lost: it raises
+    instead. The dispatch eliminations, which the fence replays, stay
+    allowed, and the stopped crawl then runs on to the oracle's result."""
+    pages, seeds = site
+    cfg = crawl_cfg(seeds, limit=10)
+    root = str(tmp_path / "guard")
+    crawler = SparkCrawler(spark, cfg, pages_df, root, checkpoint_every=50)
+    crawler.run(max_waves=2, finalize=False)
+    assert crawler._ckpt_fut is not None
+    for name in ("vocab", "seen"):
+        with pytest.raises(RuntimeError, match=name):
+            crawler._set(name, crawler._t(name))
+    crawler._set("frontier", crawler._t("frontier"), elim_ok=True)
+    engine = crawler.run()
+    oracle = OracleCrawler(cfg, fetch=pages_as_site(pages).get).run()
+    assert engine.dispatched == oracle.dispatched
+    assert engine.accepted == oracle.accepted

@@ -1,6 +1,6 @@
 """Exact-substring dedup (Lee et al. hashed-window equivalent) and
 perplexity bucketing. Spark<->DuckDB parity is pinned by the driver
-oracle (scripts/check_oracle.py); these tests pin the semantics the SQL
+oracle (scripts/check_oracle_strict.py); these tests pin the semantics the SQL
 can't see: the max_df capped path and ground-truth window counting."""
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Training-data pipeline ops added in round 3: PII scrub, intra-doc
 repetition filter, benchmark decontamination. Ground-truth semantics are
 pinned here; Spark<->DuckDB parity is pinned by the driver oracle (and
-scripts/check_oracle.py)."""
+scripts/check_oracle_strict.py)."""
 
 from __future__ import annotations
 

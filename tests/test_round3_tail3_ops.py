@@ -3,7 +3,7 @@ the CUSUM prefix-sum rewrite vs the literal sequential recursion, the
 Page-Hinkley window algebra vs its textbook update loop, and Allan
 variance vs a direct block-mean recount. Pure-Python recomputation
 pins the SEMANTICS; Spark<->DuckDB parity is pinned by the driver
-oracle (scripts/check_oracle.py)."""
+oracle (scripts/check_oracle_strict.py)."""
 
 from __future__ import annotations
 

@@ -2,7 +2,7 @@
 18+): reuse-distance MRC, split-conformal coverage, session-timeout
 sweep, MinHash signature-size error, IVF nprobe recall, pipeline token
 waterfall. Pure-Python recomputation pins the SEMANTICS; Spark<->DuckDB
-parity is pinned by the driver oracle (scripts/check_oracle.py)."""
+parity is pinned by the driver oracle (scripts/check_oracle_strict.py)."""
 
 from __future__ import annotations
 

@@ -89,12 +89,9 @@ def tune_main(argv: list[str]) -> int:
     import os
 
     args = _tune_parser().parse_args(argv)
-    from pyspark.sql import SparkSession
+    from webcrawler_spark.session import make_session
 
-    b = SparkSession.builder.appName("webcrawler-spark-tune")
-    if args.master:
-        b = b.master(args.master)
-    spark = b.getOrCreate()
+    spark = make_session("webcrawler-spark-tune", args.master)
 
     from webcrawler_spark.plans.tune import (
         build_pairs,
@@ -165,16 +162,9 @@ def query_main(argv: list[str]) -> int:
         print(f"unknown query {args.name!r}; use --list", file=sys.stderr)
         return 2
 
-    from pyspark.sql import SparkSession
+    from webcrawler_spark.session import make_session
 
-    b = SparkSession.builder.appName(f"webcrawler-spark-query-{args.name}")
-    if args.master:
-        b = b.master(args.master)
-    spark = (
-        b.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = make_session(f"webcrawler-spark-query-{args.name}", args.master)
     spark.sparkContext.setLogLevel("WARN")
     df = REGISTRY[args.name][0](spark, args.sf_dir)
     if args.out:
@@ -194,20 +184,12 @@ def main(argv: list[str] | None = None) -> int:
         return query_main(argv)
     args = build_parser().parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from webcrawler_spark.session import make_session
 
-    b = SparkSession.builder.appName("webcrawler-spark")
-    if args.master:
-        b = b.master(args.master)
-    b = (
-        b.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
+    conf = {}
     if args.shuffle_partitions:
-        b = b.config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
-    spark = b.getOrCreate()
+        conf["spark.sql.shuffle.partitions"] = args.shuffle_partitions
+    spark = make_session("webcrawler-spark", args.master, conf)
     spark.sparkContext.setLogLevel("WARN")
 
     from webcrawler_spark.config import CrawlConfig

@@ -462,20 +462,16 @@ class SparkCrawler:
 
     def _set(self, name: str, df: DataFrame, *, elim_ok: bool = False):
         """Single write path for in-memory state tables, enforcing the
-        background-materialization invariant (ADVICE r4): while a hot
-        frontier/net_edges snapshot is in flight (``_ckpt_fut`` set),
-        the ONLY legal mutations of those two tables are the dispatch
-        elimination anti-joins, which are recorded in
-        ``_postckpt_elim`` and re-applied at the fence. Any other write
-        in that window would be silently overwritten at swap-in — so it
-        raises here instead of corrupting state later."""
-        if (
-            not elim_ok
-            and name in ("frontier", "net_edges")
-            and getattr(self, "_ckpt_fut", None) is not None
-        ):
+        background-materialization invariant: while a snapshot is in
+        flight (``_ckpt_fut`` set), the fence will overwrite every table
+        it holds (all hot tables, the cold ones every 4th wave). The ONLY
+        legal writes in that window are the frontier/net_edges dispatch
+        elimination anti-joins, which are recorded in ``_postckpt_elim``
+        and re-applied at the fence. Any other write would be silently
+        lost at swap-in — so it raises here instead."""
+        if not elim_ok and getattr(self, "_ckpt_fut", None) is not None:
             raise RuntimeError(
-                f"write to hot table {name!r} while a background "
+                f"write to state table {name!r} while a background "
                 "materialization is in flight would be lost at the fence; "
                 "call _ckpt_fence() first, or record the write as a "
                 "dispatch elimination (elim_ok=True)"
@@ -1594,30 +1590,17 @@ class SparkCrawler:
             for n in _COLD_TABLES:
                 snap[n] = self._t(n)
 
-        def _ckpt_job(df):
-            # low-priority FAIR pool ('ckpt'): background jobs yield to the
-            # in-path dispatch/parse jobs instead of splitting cores evenly
-            # (a no-op under FIFO scheduling, e.g. in tests)
-            self.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "ckpt"
-            )
-            return df.localCheckpoint()
-
-        # background job width scales with task slots: FAIR weights cap the
-        # ckpt pool's SHARE, but running tasks are never preempted — at 8
-        # slots a 4-job burst churns slots between the dispatch top-k's
-        # stages; at 32 slots there is headroom to spare
+        # background job width scales with task slots: running tasks are
+        # never preempted, so at 8 slots a 4-job burst churns slots between
+        # the dispatch top-k's stages; at 32 slots there is headroom to spare
         bg_width = 4 if self.spark.sparkContext.defaultParallelism >= 16 else 2
 
         def _materialize():
             # concurrent localCheckpoint jobs: the tables are independent
             # scans, and this whole block is off the critical path — finish
             # before the next wave's fence (dispatch+parse hide it)
-            self.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "ckpt"
-            )
             with ThreadPoolExecutor(max_workers=bg_width) as ex:
-                futs = {n: ex.submit(_ckpt_job, df) for n, df in snap.items()}
+                futs = {n: ex.submit(df.localCheckpoint) for n, df in snap.items()}
                 out = {n: f.result() for n, f in futs.items()}
             # the two average scalars the next wave's fold needs — computed
             # here, off the critical path, on the freshly materialized table
@@ -1690,17 +1673,9 @@ class SparkCrawler:
         if self._commit_fut is not None:
             self._commit_fut.result()
         state = _json.loads(_json.dumps(state))
-        def _commit_job(wave=done, tables=tables, state=state,
-                        modes=modes, deletes=deletes):
-            # durable writes also ride the low-priority pool
-            self.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "ckpt"
-            )
-            return self.catalog.commit(
-                wave, tables, state, modes=modes, deletes=deletes
-            )
-
-        self._commit_fut = self._commit_pool.submit(_commit_job)
+        self._commit_fut = self._commit_pool.submit(
+            self.catalog.commit, done, tables, state, modes=modes, deletes=deletes
+        )
         self._committed_wave = done
         self._pending_deltas.clear()
         self._pending_deletes.clear()

@@ -29,9 +29,9 @@ def local_frame(
     """``rows`` is a pandas DataFrame or a sequence of row tuples, in the
     column order of ``schema`` (a ``StructType`` or a DDL string).
 
-    Needs ``spark.sql.execution.arrow.pyspark.enabled`` (every session
-    this package builds sets it); without it pandas input falls back to
-    the Python-RDD path, still correct."""
+    Needs ``spark.sql.execution.arrow.pyspark.enabled``, a product
+    setting of ``webcrawler_spark.session.make_session``; without it
+    pandas input falls back to the Python-RDD path, still correct."""
     import pandas as pd
 
     st = schema if isinstance(schema, T.StructType) else T.DataType.fromDDL(schema)
